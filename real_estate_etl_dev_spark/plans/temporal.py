@@ -18,10 +18,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join, sessionize
+from ..session import conf_span
 from .catalog import query, T
 
 _GAP_S = 1800
 _US = 1_000_000
+# Shuffle partitions for the stateful streams: state-store cost is per
+# partition per micro-batch, and the fixtures hold a handful of keys.
+_STATE_PARTITIONS = {"spark.sql.shuffle.partitions": "8"}
 
 
 @query(
@@ -510,10 +514,8 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is keyed by (window, event_type) — a handful of live keys — and
     # the state-store cost is per partition per micro-batch; the same
     # key-cardinality sizing the other stateful streams pinned in r06
-    # (see streaming_queue_status).  Save/restore the session conf.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # (see streaming_queue_status).
+    with conf_span(spark, _STATE_PARTITIONS):
         q = (
             counts.writeStream.format("memory")
             .queryName(name)
@@ -523,8 +525,6 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # The memory sink holds the result — the dropped files and
     # checkpoint are no longer needed, so don't leak them per run.
     import shutil
@@ -620,22 +620,18 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     name = f"swd_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions while the stateful stream runs (state store
-    # per partition per micro-batch — see streaming_queue_status).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_span(spark, _STATE_PARTITIONS):
+            q = (
+                deduped.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(workdir, ignore_errors=True)
 
     totals = incoming.groupBy("event_type").agg(
@@ -750,22 +746,20 @@ def streaming_queue_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PER MICRO-BATCH.  The fixture has ~150 keys, so 8 state
     # partitions (vs the session's 32) cut worker round-trips 4× with
     # zero skew risk; a real deployment sizes this to its key
-    # cardinality before the first checkpoint write.  Save/restore the
-    # session conf — only this stream should see it.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # cardinality before the first checkpoint write.  Only this stream
+    # should see it.
     try:
-        q = (
-            states.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_span(spark, _STATE_PARTITIONS):
+            q = (
+                states.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("update")
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(workdir, ignore_errors=True)
 
     rank = F.expr(
@@ -866,22 +860,18 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.session_window("ts", "4 hours").alias("w")
     ).agg(F.count(F.lit(1)).alias("n_events"))
     name = f"ssw_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions while the stateful stream runs (state store
-    # per partition per micro-batch — see streaming_queue_status).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_span(spark, _STATE_PARTITIONS):
+            q = (
+                sess.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(workdir, ignore_errors=True)
 
     out = (
@@ -966,22 +956,18 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"sse_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions while the stateful stream runs (state store
-    # per partition per micro-batch — see streaming_queue_status).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_span(spark, _STATE_PARTITIONS):
+            q = (
+                enriched.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(workdir, ignore_errors=True)
 
     out = spark.table(name).orderBy("n_name")
@@ -1178,20 +1164,18 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions that constant cost dwarfs the data.  Run the stream
     # at 8 partitions (same posture as streaming_queue_status); on a
     # real cluster this knob is sized to state volume, not cores.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_span(spark, _STATE_PARTITIONS):
+            q = (
+                joined.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(workdir, ignore_errors=True)
 
     out = (

@@ -9,6 +9,8 @@ correctness or plan shape matters.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -64,3 +66,28 @@ def get_spark(app_name: str = "real-estate-etl-dev-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def conf_span(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the enclosed block, then restore them.
+
+    On exit, even when the block raises, each key goes back to the
+    value it held at entry; a key that was unset at entry is unset
+    again, so Spark's own default applies.  NOT reentrant: the session
+    conf is shared state, so two spans that overlap on one session
+    without strict nesting (another thread, an interleaved generator)
+    restore each other's values, and any thread sharing the session
+    sees the override for the whole span.
+    """
+    prevs = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, prev in prevs.items():
+            if prev is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, prev)

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import conf_span
+
 TABLES = (
     "region",
     "nation",
@@ -29,10 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimensions we always broadcast in joins (fits executor memory
-# at any SF — region/nation are bounded; others scale with SF).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Column pruning/pushdown left to Catalyst.
@@ -45,10 +43,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (and the DuckDB oracles) sees one stable type.
 
     EXECUTION-AFTER-RESTORE ASSUMPTION (ADVICE r04): the conf overrides
-    below are restored in ``finally`` BEFORE the returned DataFrame ever
-    executes.  Correctness therefore relies on Spark baking the
-    footer-inferred schema into the relation at ``read()`` time — true
-    today, and pinned by ``tests/test_readers.py`` (a required gate: it
+    below are restored when the ``conf_span`` exits, BEFORE the
+    returned DataFrame ever executes.  Correctness therefore relies on
+    Spark baking the footer-inferred schema into the relation at
+    ``read()`` time — true today, and pinned by
+    ``tests/test_readers.py`` (a required gate: it
     exercises all three shipped ts dtypes through this path).  Any
     future change that re-resolves the file schema at ACTION time
     (schema merge, ``REFRESH TABLE``, a lazy file-index rebuild) would
@@ -59,7 +58,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # Save/restore confs so a scan never permanently mutates a
+        # Scoped confs so a scan never permanently mutates a
         # (possibly driver-owned) shared session.
         confs = {
             # TIMESTAMP(NANOS) variant: read as epoch-nanos int64.
@@ -70,10 +69,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # filter pushdown on the scan.
             "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         }
-        prevs = {k: spark.conf.get(k, None) for k in confs}
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
+        with conf_span(spark, confs):
             df = spark.read.parquet(path)
             ts_type = df.schema["ts"].dataType.typeName()
             if ts_type == "long":
@@ -88,12 +84,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 # filters, date_format, and the oracle hash-compare agree.
                 return df.withColumn("ts", F.col("ts").cast("timestamp"))
             return df  # already TimestampType
-        finally:
-            for k, prev in prevs.items():
-                if prev is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, prev)
     return spark.read.parquet(path)
 
 

@@ -267,8 +267,8 @@ SHOWCASE = [
     ),
     (
         "dedup_minhash_pairs_zipf",
-        "MinHash banding on the Zipfian corpus (built r10, registers "
-        "r12; unregistered — resolved from plans.llmdata): the SAME "
+        "MinHash banding on the Zipfian corpus (built r10, registered "
+        "r12): the SAME "
         "banded-bucket equality join as the certified dense twin, "
         "but long-tail shingles make band buckets sparse, so bucket "
         "mass concentrates on true duplicates; the recall gate's "
@@ -276,8 +276,8 @@ SHOWCASE = [
     ),
     (
         "dedup_semantic_kmeans",
-        "SemDeDup on data-derived clusters (built r11, registers "
-        "r12; unregistered — resolved from plans.llmdata): the "
+        "SemDeDup on data-derived clusters (built r11, registered "
+        "r12): the "
         "exact-decimal Lloyd loop unrolls into the plan — per round "
         "one broadcast join of k*dim centroid cells on pos plus two "
         "keyed exchanges, lineage truncated per round by "
@@ -310,22 +310,9 @@ SHOWCASE = [
         "— the corpus is never shuffled on the gram or bucket key.",
     ),
     (
-        "dataset_overlap_kmv",
-        "KMV dataset-overlap estimation (built r14, registers in an "
-        "r15+ replacement slot; unregistered — resolved from "
-        "plans.llmdata): each corpus slice reduces to its k smallest "
-        "distinct content hashes — map-side partial dedup, ONE "
-        "8-byte-key exchange (tau-cut ~1/tau at the 100 TB posture, "
-        "provably sketch-identical), TakeOrderedAndProject(k) — and "
-        "every union/intersection/Jaccard estimate is scalar algebra "
-        "over the checkpointed k-row sketches; the exact_* audit "
-        "columns are the one corpus-keyed distinct/join a production "
-        "overlap screen drops.",
-    ),
-    (
         "bpe_learn_merges",
-        "BPE merge learning (built r11, registers r13; unregistered "
-        "— resolved from plans.llmdata): tokenizer TRAINING as an "
+        "BPE merge learning (built r11, registered r13): "
+        "tokenizer TRAINING as an "
         "unrolled loop — per round one map-side tokenize + pair "
         "explode into a vocabulary-bounded hash-agg exchange "
         "(map-side combine: the shuffle carries pair partials, never "
@@ -374,14 +361,8 @@ def main() -> None:
         f"`{SF_DIR}`; AQE final plans may differ only in partition "
         "coalescing.\n",
     ]
-    from real_estate_etl_dev_spark.plans import llmdata
-
     for name, note in SHOWCASE:
-        # Deferred-registration flagships (window-budget bookkeeping,
-        # COVERAGE.md round records) are showcased from the module
-        # before their catalog row lands.
-        fn = CATALOG[name].fn if name in CATALOG else getattr(llmdata, name)
-        df = fn(spark, SF_DIR)
+        df = CATALOG[name].fn(spark, SF_DIR)
         parts.append(f"## {name}\n\n{note}\n\n```\n{trimmed_plan(df)}\n```\n")
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(parts))

@@ -1014,67 +1014,3 @@ def test_dsir_plan_shape(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     assert "WindowGroupLimit" in plan, plan
     assert plan.count("hashpartitioning(b#") == 0, plan
-
-
-def test_kmv_overlap_plan_shape(spark, sf_dir):
-    """Pre-registration plan pin for the r15-deferred
-    dataset_overlap_kmv (see the deferral note in plans/llmdata.py).
-    Two layers: (1) the SKETCH leg — the scale path — is map-side
-    partial dedup into ONE 8-byte-key exchange feeding
-    TakeOrderedAndProject(k), so the reduce side sees partitions x k
-    rows, never the corpus; (2) the assembled query stays JVM-side
-    with zero CartesianProduct — every sketch consumer reads the
-    checkpointed k-row frames (Scan ExistingRDD), the membership
-    probes are broadcast LEFT-SEMI joins, the 1-row scalar combines
-    ride BroadcastNestedLoopJoin (the `_id_offset` posture), and the
-    ONLY surviving corpus-keyed exchange is the exact-audit union
-    (the leg a production overlap screen drops)."""
-    from pyspark.sql import functions as F
-
-    from real_estate_etl_dev_spark.operators.bloom import kmv_sketch
-    from real_estate_etl_dev_spark.plans.llmdata import (
-        _KMV_K,
-        dataset_overlap_kmv,
-    )
-    from real_estate_etl_dev_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 3 != 0
-    )
-    sk = kmv_sketch(docs, "text", _KMV_K)
-    sk_plan = sk._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in sk_plan, sk_plan
-    assert sk_plan.count("hashpartitioning") == 1, sk_plan
-    # map-side partial dedup before the exchange: a function-less
-    # distinct prints as TWO HashAggregate(keys=[h]) nodes bracketing
-    # the exchange — the lower one dedupes per-partition pre-shuffle
-    assert sk_plan.count("HashAggregate(keys=[h#") == 2, sk_plan
-
-    df = dataset_overlap_kmv(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert plan.count("hashpartitioning") == 1, plan
-
-
-def test_substring_spans_plan_shape(spark, sf_dir):
-    """Pre-registration plan pin for the r16-deferred
-    dedup_substring_spans (see the deferral note in plans/llmdata.py):
-    everything stays JVM-side (zero Python evaluation), zero
-    CartesianProduct (the only nested-loop is the 1-row `_id_offset`
-    broadcast combine), the duplicated-gram set is built by a hash
-    aggregate WITH map-side partials whose exchange is the plan's
-    ONLY gram-hash-keyed shuffle (the occurrence stream itself never
-    shuffles on h — the dup set broadcasts back as a LeftSemi), and
-    the interval-union runs as one doc-keyed lag window."""
-    from real_estate_etl_dev_spark.plans.llmdata import dedup_substring_spans
-
-    df = dedup_substring_spans(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert plan.count("hashpartitioning(h#") == 1, plan
-    assert "partial_count" in plan, plan
-    assert "Window" in plan and "lag(i#" in plan, plan
